@@ -758,25 +758,15 @@ def test_query_batch_matches_single_queries(spark, tmp_path):
         collection_query_batch(spark, root, "api", [[1.0, 0.0, 0.0]])
 
 
-def test_collection_query_ivf_kfill_across_killed_cells(spark, tmp_path):
-    """The filtered-IVF serving path's k-fill guarantee: the predicate
-    matches ONLY rows in the cell FARTHEST from the query (metadata
-    correlated with vector position — the classic filtered-ANN
-    failure). Starting at nprobe=1 the first probes find zero
-    candidates; the probe set must double until the matching cell is
-    reached, and the final rows must equal collection_query's exact
-    filtered scan byte-for-byte. Also pinned: the exhaustion path on
-    a predicate with fewer matches than k, and the unfiltered probe
-    short-circuit."""
+def _killed_cells_index(spark, root):
+    """40 rows in 4 one-hot cells; lang='rare' only in cell 3, the
+    cell farthest from the returned query (nearest cell 0). Returns
+    (index path, query vector)."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
         _assign_to_centroids,
         ivf_write,
-    )
-    from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
-        collection_query_ivf,
     )
 
     dim = 8
@@ -792,7 +782,6 @@ def test_collection_query_ivf_kfill_across_killed_cells(spark, tmp_path):
     df = spark.createDataFrame(
         rows, "uid double, body string, vec array<double>, lang string"
     )
-    root = str(tmp_path)
     hydrate(
         spark,
         df,
@@ -818,6 +807,25 @@ def test_collection_query_ivf_kfill_across_killed_cells(spark, tmp_path):
 
     qvec = [0.0] * dim
     qvec[0] = 10.0  # nearest cell 0; every match lives in cell 3
+    return idx, qvec
+
+
+def test_collection_query_ivf_kfill_across_killed_cells(spark, tmp_path):
+    """The filtered-IVF serving path's k-fill guarantee: the predicate
+    matches ONLY rows in the cell FARTHEST from the query (metadata
+    correlated with vector position — the classic filtered-ANN
+    failure). Starting at nprobe=1 the first probes find zero
+    candidates; the probe set must double until the matching cell is
+    reached, and the final rows must equal collection_query's exact
+    filtered scan byte-for-byte. Also pinned: the exhaustion path on
+    a predicate with fewer matches than k, and the unfiltered probe
+    short-circuit."""
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
+        collection_query_ivf,
+    )
+
+    root = str(tmp_path)
+    idx, qvec = _killed_cells_index(spark, root)
     kw = dict(
         n_results=5,
         index_path=idx,
@@ -858,6 +866,171 @@ def test_collection_query_ivf_kfill_across_killed_cells(spark, tmp_path):
     assert got_uf == collection_query(
         spark, root, "fivf", qvec, n_results=5, score_decimals=4
     ).collect()
+
+
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under a job group; return (result, its job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job ids reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_collection_query_ivf_warm_round_job_pin(spark, tmp_path):
+    """A warm one-round filtered IVF query on a bucketed collection
+    whose index carries tombstones runs at most 3 Spark jobs: the
+    declared collection, cells and tombstone schemas infer nothing,
+    and the round's top-k collect is also its fill check. Bound: the
+    top-k job plus the tombstone-mask and probed-id broadcasts."""
+    import json
+
+    import numpy as np
+    import pyarrow as pa
+
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+        ivf_delete,
+        ivf_write,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
+        collection_query_ivf,
+    )
+
+    root = _hydrated(spark, tmp_path, n_buckets=2)
+    # cells as the cosine assignment to C = I gives them (5.0 ties -> 0)
+    C = np.eye(2)
+    assigned = spark.createDataFrame(pa.table({
+        "id": [f"{u:.1f}" for u, *_ in DOCS],
+        "embedding": pa.array([v for _, _, v, _ in DOCS], pa.list_(pa.float32())),
+        "ivf_cell": pa.array([0, 0, 1, 1, 0], pa.int32()),
+    }))
+    idx = f"{root}/api/_ivf"
+    ivf_write(assigned, C, idx, metric="cosine", source=(root, "api"))
+    assert ivf_delete(spark, idx, ["5.0"]) == 1
+    with open(f"{idx}/ivf_index.json") as f:
+        assert json.load(f)["tombstones"]["n"] == 1
+
+    def query():
+        st: dict = {}
+        rows = collection_query_ivf(
+            spark, root, "api", [1.0, 0.0], n_results=2, index_path=idx,
+            nprobe=2, where={"rating": {"$gte": 1}}, stats_out=st,
+        ).collect()
+        return rows, st
+
+    warm, _ = query()
+    (rows, st), jobs = _jobs_in(spark, "ivf_warm_round", query)
+    assert st["rounds"] == 1
+    assert rows == warm and [r["id"] for r in rows] == ["1.0", "2.0"]
+    assert jobs <= 3, f"one-round query ran {jobs} Spark jobs"
+
+
+def test_collection_query_ivf_one_topk_action_per_round(spark, tmp_path, monkeypatch):
+    """The killed-cells k-fill query walks several probe rounds and
+    pays exactly one action per round: the top-k collect, with no
+    separate count-based fill check."""
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
+        collection_query_ivf,
+    )
+
+    root = str(tmp_path)
+    idx, qvec = _killed_cells_index(spark, root)
+    frame = type(spark.range(1))
+    calls = {"toArrow": 0, "count": 0, "collect": 0}
+    for name in calls:
+        real = getattr(frame, name)
+
+        def counted(self, *a, _real=real, _name=name, **k):
+            calls[_name] += 1
+            return _real(self, *a, **k)
+
+        monkeypatch.setattr(frame, name, counted)
+    st: dict = {}
+    res = collection_query_ivf(
+        spark, root, "fivf", qvec, n_results=5, index_path=idx, nprobe=1,
+        where={"lang": "rare"}, score_decimals=4, stats_out=st,
+    )
+    assert st["rounds"] == 3 and st["final_probe"] == 4
+    assert calls == {"toArrow": 0, "count": 0, "collect": st["rounds"]}
+    assert len(res.collect()) == 5
+
+
+def test_collection_query_ivf_result_is_a_snapshot_behind_the_fence(spark, tmp_path):
+    """The IVF door computes its rows inside the call, after the etag
+    fence: a delete committed after the call but before ``.collect()``
+    does not change them, and the next call on the now-stale index
+    raises. The frame has ``collection_query``'s columns and types."""
+    from vector_databases___hydrate_chroma_db_collection_spark.errors import (
+        StaleIndexError,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
+        ivf_build,
+        ivf_write,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
+        collection_query_ivf,
+    )
+
+    root = _hydrated(spark, tmp_path)
+    assigned, C = ivf_build(read_collection(spark, root, "api"), n_centroids=2, seed=7)
+    idx = f"{root}/api/_ivf"
+    ivf_write(assigned, C, idx, metric="cosine", source=(root, "api"))
+    kw = dict(n_results=3, index_path=idx, nprobe=2, score_decimals=4)
+    for dist in (False, True):
+        got = collection_query_ivf(
+            spark, root, "api", [1.0, 0.0], include_distance=dist, **kw
+        )
+        want = collection_query(
+            spark, root, "api", [1.0, 0.0], n_results=3, score_decimals=4,
+            include_distance=dist,
+        )
+        assert got.dtypes == want.dtypes
+        assert got.collect() == want.collect()
+    held = collection_query_ivf(spark, root, "api", [1.0, 0.0], **kw)
+    snapshot = [tuple(r) for r in collection_query_ivf(
+        spark, root, "api", [1.0, 0.0], **kw
+    ).collect()]
+    assert snapshot[0][0] == "1.0"
+    assert collection_delete(spark, root, "api", ids=["1.0"]) == 1
+    assert [tuple(r) for r in held.collect()] == snapshot
+    assert [tuple(r) for r in held.select("id", "score").collect()] == [
+        (r[0], r[-1]) for r in snapshot
+    ]
+    with pytest.raises(StaleIndexError):
+        collection_query_ivf(spark, root, "api", [1.0, 0.0], **kw)
+
+
+def test_buckets_for_ids_match_stored_buckets(spark, tmp_path):
+    """The literal-frame bucket hash equals the ``id_bucket`` the
+    layout stored for ASCII, non-ASCII and empty-string ids."""
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.chroma_api import (
+        _buckets_for_ids,
+        collection_add,
+    )
+    from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
+        get_or_create_collection,
+    )
+
+    root = str(tmp_path)
+    ids = ["a", "id-42", "ünïcødé", "日本語", "🙂", ""]
+    get_or_create_collection(root, "b", 2, n_buckets=5)
+    collection_add(
+        spark, root, "b", ids=ids,
+        embeddings=[[1.0, float(i)] for i in range(len(ids))],
+    )
+    stored = {
+        r["id"]: r["id_bucket"]
+        for r in read_collection(spark, root, "b", include_bucket=True).collect()
+    }
+    assert set(stored) == set(ids)
+    for i in ids:
+        assert _buckets_for_ids(spark, [i], 5) == [stored[i]]
+    assert sorted(_buckets_for_ids(spark, ids, 5)) == sorted(set(stored.values()))
+    assert _buckets_for_ids(spark, [], 5) == []
 
 
 def test_export_import_with_index_restamps_and_serves(spark, tmp_path):

@@ -1136,7 +1136,9 @@ def ivf_write(
     """Persist an IVF index: the assigned corpus partitioned by
     ``ivf_cell`` (so queries get partition pruning) plus a JSON
     sidecar with centroids + metric. The index is just a dataset — it
-    scans, joins, and replicates like any other table.
+    scans, joins, and replicates like any other table. The sidecar
+    also records the cells schema (``cells_schema``) so ``ivf_read``
+    declares it instead of paying an inference job per read.
 
     ``source=(root, name)`` stamps the sidecar with the source
     collection's ``collection_etag`` so ``ivf_read`` can detect (and
@@ -1225,6 +1227,7 @@ def ivf_write(
             "location": cells_dir,
             "train_stats": train_stats,
             "id_bloom": id_bloom,
+            "cells_schema": cells_back.schema.jsonValue(),
         },
     )
     _drop_old_cells(path, old_meta, cells_dir)
@@ -1266,10 +1269,16 @@ def ivf_read(
     with open(os.path.join(path, "ivf_index.json")) as f:
         meta = json.load(f)
     _check_source_stamp(meta, path, verify_source)
+    reader = spark.read
+    if meta.get("cells_schema"):
+        # appends, upserts and compactions keep the cells shape, so
+        # the schema ivf_write recorded stays exact; sidecars written
+        # before it was recorded infer as before
+        from pyspark.sql.types import StructType
+
+        reader = reader.schema(StructType.fromJson(meta["cells_schema"]))
     # pre-versioning sidecars have no "location" — cells at bare name
-    assigned = spark.read.parquet(
-        os.path.join(path, meta.get("location", "cells"))
-    )
+    assigned = reader.parquet(os.path.join(path, meta.get("location", "cells")))
     if not include_tombstoned:
         idc = [c for c in assigned.columns if c != "ivf_cell"][0]
         assigned = _mask_tombstones(spark, path, meta, assigned, idc)
@@ -1675,7 +1684,9 @@ def _tombstones_df(spark, p: str, meta: dict) -> DataFrame | None:
     ts = meta.get("tombstones")
     if not ts or not int(ts.get("n") or 0):
         return None
-    return spark.read.parquet(os.path.join(p, ts["location"]))
+    return spark.read.schema("_ts_id string").parquet(
+        os.path.join(p, ts["location"])
+    )
 
 
 def _mask_tombstones(spark, p: str, meta: dict, df: DataFrame, id_col: str) -> DataFrame:

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 
 from vector_databases___hydrate_chroma_db_collection_spark.errors import EngineError
 from vector_databases___hydrate_chroma_db_collection_spark.plans.collection import (
+    COLLECTION_SCHEMA,
     clone_untouched_buckets,
     current_data_dir,
     load_manifest,
@@ -170,10 +171,15 @@ def _buckets_for_ids(
 ) -> list[int]:
     """The distinct bucket set an id list hashes into, computed with
     the layout's own expression (one tiny local job over a literal
-    frame — never a scan of the collection); bounded by n_buckets."""
+    frame — never a scan of the collection); bounded by n_buckets.
+    The literal frame is built from Arrow, so hashing it spawns no
+    Python worker (a list-built frame would)."""
+    import pyarrow as pa
+
+    literal = pa.table({"id": pa.array([str(i) for i in ids], pa.string())})
     return [
         r["b"]
-        for r in spark.createDataFrame([(str(i),) for i in ids], "id string")
+        for r in spark.createDataFrame(literal)
         .select(F.pmod(F.xxhash64("id"), F.lit(n_buckets)).alias("b"))
         .distinct()
         .collect()
@@ -551,12 +557,20 @@ def collection_query_ivf(
     (partition-pruned on the ``ivf_cell`` layout), the predicate is
     evaluated on candidate rows via one semi-join of the collection
     against the probed ids (Catalyst broadcasts the small side), and
-    the fill check is ``limit(k).count()`` — an early-exit probe, not
-    a full count. Expansion rounds are bounded by log2(n_centroids).
-    ``verify_source`` keeps ``ivf_read``'s etag fence: a stale index
-    (collection mutated since the stamp) refuses rather than serving
-    deleted rows. Returns ``(id, document, metadata, score
-    [, distance])`` best-first — ``collection_query``'s contract."""
+    the round is ONE action: the filtered exact top-k of the probed
+    candidates is collected, and it doubles as the fill check (it
+    holds k rows iff the probed cells hold k matches).
+    Expansion rounds are bounded by log2(n_centroids).
+
+    The result is EAGER: the etag fence (``verify_source``, on by
+    default — a stale index, collection mutated since the stamp,
+    raises ``StaleIndexError`` rather than serving deleted rows) runs
+    first, then the rounds read the collection, all inside this call.
+    The returned frame is a local relation over the collected rows,
+    so acting on it runs no further job, and a mutation committed
+    after the call returns does not change what it holds. Returns
+    ``(id, document, metadata, score[, distance])`` best-first —
+    ``collection_query``'s columns and types."""
     import numpy as np
 
     from vector_databases___hydrate_chroma_db_collection_spark.operators.ann import (
@@ -596,8 +610,18 @@ def collection_query_ivf(
         cand_ids = assigned.filter(
             F.col("ivf_cell").isin(probed)
         ).select(F.col(idx_id).cast("string").alias("id"))
-        cand = filtered.join(cand_ids, "id", "left_semi")
-        if p >= n_cells or cand.limit(k).count() >= k:
+        top = _serve_topk(
+            filtered.join(cand_ids, "id", "left_semi"),
+            manifest.metric,
+            query_vector,
+            k,
+            score_decimals=score_decimals,
+            include_distance=include_distance,
+        )
+        # collect() runs TakeOrderedAndProject's driver-side merge;
+        # toArrow() would add a single-partition shuffle stage
+        rows = top.collect()
+        if p >= n_cells or len(rows) >= k:
             break
         p = min(n_cells, p * 2)
     if stats_out is not None:
@@ -608,14 +632,15 @@ def collection_query_ivf(
         stats_out["rounds"] = rounds
         stats_out["final_probe"] = p
         stats_out["n_cells"] = n_cells
-    return _serve_topk(
-        cand,
-        manifest.metric,
-        query_vector,
-        k,
-        score_decimals=score_decimals,
-        include_distance=include_distance,
+    # an Arrow-built frame is a LocalRelation: collecting it runs no
+    # job and, unlike a frame built from a Python list, no Python worker
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        [r.asDict() for r in rows], schema=to_arrow_schema(top.schema)
     )
+    return spark.createDataFrame(table, schema=top.schema)
 
 
 def collection_query_batch_ivf(
@@ -1687,11 +1712,7 @@ def _chroma_items_df(
                 else {},
             )
         )
-    return spark.createDataFrame(
-        rows,
-        "id string, document string, embedding array<float>, "
-        "metadata map<string,string>",
-    )
+    return spark.createDataFrame(rows, COLLECTION_SCHEMA)
 
 
 def _check_dim_vs_manifest(root, name, embeddings, who: str) -> None:

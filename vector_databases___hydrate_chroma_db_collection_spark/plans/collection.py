@@ -36,6 +36,12 @@ MANIFEST_NAME = "_manifest.json"
 DATA_DIR = "data"
 CURRENT_POINTER = "_current"
 RETAINED_MARKER = "_retained"
+# The canonical stored row shape; bucketed layouts add the
+# ``id_bucket int`` hive-partition column.
+COLLECTION_SCHEMA = (
+    "id string, document string, embedding array<float>, "
+    "metadata map<string,string>"
+)
 
 
 @dataclass(frozen=True)
@@ -456,7 +462,16 @@ def read_collection(
     prune buckets (filters on it skip whole hive partitions).
     ``version`` time-travels to a retained previous data dir (a
     dir name from ``collection_versions``); versions exist after
-    ``retain_previous=True`` rewrites and until vacuum."""
+    ``retain_previous=True`` rewrites and until vacuum.
+
+    The scan DECLARES the schema the manifest fixes
+    (``COLLECTION_SCHEMA``, plus ``id_bucket int`` on a bucketed
+    layout) instead of inferring it from a footer: every writer of
+    the data dir stores exactly that shape, so the declared schema
+    equals the inferred one and each read saves the inference job.
+    One consequence: a collection whose data dir holds no parquet yet
+    (created, never written) reads as an EMPTY frame in that schema
+    rather than raising "Unable to infer schema"."""
     manifest = load_manifest(root, name)
     if version is None:
         data_dir = current_data_dir(root, manifest.name)
@@ -468,7 +483,8 @@ def read_collection(
                 f"unknown collection version {version!r}; "
                 f"available: {sorted(known)}"
             )
-    df = spark.read.parquet(data_dir)
+    schema = COLLECTION_SCHEMA + (", id_bucket int" if manifest.n_buckets else "")
+    df = spark.read.schema(schema).parquet(data_dir)
     if manifest.n_buckets and not include_bucket:
         df = df.select("id", "document", "embedding", "metadata")
     return df
